@@ -116,11 +116,7 @@ class CrawlPolicy:
     n_buckets: int = 8
     score_decay: float = 0.85
     max_depth: int = 64
-    bloom_bits_per_key: int = 10
     salt: int = 16
-    # URL-seen prefilter layer: "bloom" (insert-only) or "cuckoo"
-    # (delete-capable, saturates instead of false-negating on overflow)
-    filter_kind: str = "bloom"
     # fold seen-table round deltas every K rounds (0 = never): bounds
     # the per-round file count the exact anti-join has to list
     compact_every: int = 8
@@ -138,13 +134,6 @@ class CrawlPolicy:
     # dimension tables (budgets, robots rules) at or below this many
     # rows broadcast; above it they join host-bucketed
     broadcast_dim_threshold: int = 1 << 20
-    # bloom/cuckoo state at or below this many TOTAL payload bytes is
-    # mirrored on the driver and broadcast into the probe/merge (no
-    # bucket exchange); above it the bucket-cogrouped path is the
-    # authority — at 10^10 seen URLs the filter state is ~12 GB and
-    # must never be collected or broadcast. 64 MB default: the same
-    # executor-memory envelope as a large broadcast join side.
-    broadcast_bloom_bytes: int = 64 << 20
 
     def tokens(self, host: str) -> int:
         return self.host_tokens.get(host, self.default_tokens)

@@ -5,6 +5,7 @@ and final URL-seen set under the same seed list + politeness budget
 """
 
 import shutil
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -96,6 +97,22 @@ class TestBloom:
         assert B.bloom_might_contain(b, ["a", "b"]).all()
         c = B.bloom_or(B.bloom_build(["x"], m), B.bloom_build(["y"], m))
         assert B.bloom_might_contain(c, ["x", "y"]).all()
+
+    def test_bloom_build_probe_no_false_negative(self):
+        from hypothesis import given, settings, strategies as st
+
+        @settings(max_examples=50, deadline=None)
+        @given(st.lists(st.text(min_size=1, max_size=40), min_size=1,
+                        max_size=80),
+               st.integers(min_value=0, max_value=3))
+        def prop(members, split):
+            m = B.bloom_sizing(len(members))
+            base, extra = members[split:], members[:split]
+            payload = B.bloom_build(base, m)
+            payload = B.bloom_add(payload, extra, m)
+            assert B.bloom_might_contain(payload, members).all()
+
+        prop()
 
 
 class TestOracleSanity:
@@ -204,7 +221,6 @@ class TestShuffleJoinRegime:
                              for k, v in POLICY.robots_disallow.items()},
             broadcast_wave_threshold=0,   # always take the shuffle join
             broadcast_dim_threshold=0,
-            broadcast_bloom_bytes=0,      # bucket-cogrouped probe/merge
             seq_window_threshold=0)       # salted top-k + two-phase seq
         state_dir = str(tmp_path_factory.mktemp("crawl_state_shuffle"))
         eng = FrontierEngine(spark, pages, state_dir, pol)
@@ -277,13 +293,31 @@ class TestResume:
                 raise OSError("injected: seen write lost")
             return real_write(self, table, r, df)
 
+        # every DataFrame the round caches, to check its release
+        df_cls = type(pages)
+        real_cache = df_cls.cache
+        cached = []
+
+        def recording_cache(df):
+            cached.append(df)
+            return real_cache(df)
+
+        threads_before = set(threading.enumerate())
         monkeypatch.setattr(CS, "write", failing_write)
+        monkeypatch.setattr(df_cls, "cache", recording_cache)
         with pytest.raises(OSError, match="injected"):
             eng.run_round(1)
         monkeypatch.setattr(CS, "write", real_write)
+        monkeypatch.setattr(df_cls, "cache", real_cache)
 
         st = CrawlState(spark, state_dir)
         assert st.last_committed_round() == 0  # round 1 NOT committed
+        # the failed round released its cache and its writer threads
+        assert cached
+        assert not any(df.storageLevel.useMemory or df.storageLevel.useDisk
+                       for df in cached)
+        assert not [t for t in set(threading.enumerate()) - threads_before
+                    if t.name.startswith("ThreadPoolExecutor")]
 
         eng2 = FrontierEngine(spark, pages, state_dir, POLICY)
         assert eng2.resume_round() == 1       # replay the failed round
@@ -295,6 +329,31 @@ class TestResume:
             assert non_empty[r] == wave, f"round {r} mismatch"
         seen = {x["url"] for x in st.read_all_rounds(
             "seen", 64, SEEN_SCHEMA).collect()}
+        assert seen == oracle.seen
+
+    def test_lost_carry_blocks_replay_from_parquet(
+            self, spark, pages, oracle, seeds, tmp_path_factory):
+        """Forced fallback of the committed-state carry: the checkpoint
+        blocks behind the carried frontier are dropped before round 1
+        reads them. The round replays from the committed parquet and
+        the crawl still equals the oracle."""
+        state_dir = str(tmp_path_factory.mktemp("crawl_state_lost_carry"))
+        eng = FrontierEngine(spark, pages, state_dir, POLICY)
+        eng.bootstrap(seeds)
+        eng.run_round(0)
+        r, carried = eng._carry["frontier"]
+        assert r == 1
+        carried._jdf.queryExecution().logical().rdd().unpersist(True)
+        eng.run_round(1)
+        rest = eng.run(max_rounds=64)
+        scheds = read_engine_schedules(spark, state_dir,
+                                       2 + len(rest) + 1)
+        non_empty = {r: w for r, w in scheds.items() if w}
+        assert len(non_empty) == len(oracle.schedules)
+        for r, wave in enumerate(oracle.schedules):
+            assert non_empty[r] == wave, f"round {r} mismatch"
+        seen = {x["url"] for x in CrawlState(spark, state_dir)
+                .read_all_rounds("seen", 64, SEEN_SCHEMA).collect()}
         assert seen == oracle.seen
 
 
