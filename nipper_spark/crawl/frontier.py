@@ -50,6 +50,7 @@ from nipper_spark.crawl.state import (
 from nipper_spark.crawl.sitemaps import crawl_extract_outlinks
 from nipper_spark.functions.url import (HOST_RE_SQL, canonicalize_url, host_bucket, host_of, url_hash64)
 from nipper_spark.operators.cumsum import row_sequence
+from nipper_spark.session import local_df
 
 
 @dataclass
@@ -206,12 +207,13 @@ class FrontierEngine:
             rows.append((canon, host, host_bucket(host, pol.n_buckets),
                          0, float(score), 0))
         self._carry.clear()
-        frontier = (self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
+        frontier = (local_df(self.spark, rows, FRONTIER_SCHEMA)
                     .repartition(pol.n_buckets, "host_bucket")
                     .sortWithinPartitions("depth", F.desc("score"), "url")
                     .localCheckpoint(eager=False))
         self.state.write("frontier", 0, frontier)
-        seen = self.spark.createDataFrame(
+        seen = local_df(
+            self.spark,
             [(u, b, url_hash64(u), 0) for (u, h, b, d, s, r) in rows],
             SEEN_SCHEMA)
         self.state.write("seen", 0, seen)
@@ -221,7 +223,7 @@ class FrontierEngine:
         m_bits = B.bloom_sizing(max(len(rows), 1024) * 4)
         payloads = [(b, B.bloom_build(urls, m_bits), len(urls))
                     for b, urls in sorted(by_bucket.items())]
-        bloom_df = self.spark.createDataFrame(payloads, BLOOM_SCHEMA)
+        bloom_df = local_df(self.spark, payloads, BLOOM_SCHEMA)
         self.state.write("bloom", 0, bloom_df)
         self.state.commit_round(-1)
         self._carry["frontier"] = (0, frontier)
@@ -259,7 +261,7 @@ class FrontierEngine:
         self.state.write("seen", 0, seeds.select(
             "url", "host_bucket", "url_hash",
             F.lit(0).alias("round")))
-        empty_bloom = self.spark.createDataFrame([], BLOOM_SCHEMA)
+        empty_bloom = local_df(self.spark, [], BLOOM_SCHEMA)
         payloads = (seeds.groupBy("host_bucket")
                     .cogroup(empty_bloom.groupBy("host_bucket"))
                     .applyInPandas(_bloom_merge, schema=BLOOM_SCHEMA))
@@ -286,9 +288,9 @@ class FrontierEngine:
                   wave_bound: int | None = None) -> RoundStats:
         """One batch round. Counter discipline: every lineage counter
         rides an Observation on a write we run anyway (the free-counter
-        pattern, SURVEY.md §2.9) — a round costs ~6 Spark jobs total,
-        not one job per statistic, so per-round fixed latency stays flat
-        as cluster size grows. ``known_nonempty`` skips the emptiness
+        pattern, SURVEY.md §2.9) — a round costs ~23 Spark jobs
+        (``frontier.jobs_per_round``) however many statistics it keeps,
+        so per-round fixed latency stays flat as cluster size grows. ``known_nonempty`` skips the emptiness
         probe job when the caller already proved it (previous round's
         frontier_next > 0).
 
@@ -394,10 +396,9 @@ class FrontierEngine:
         seen delta; frontier and bloom state carry over unchanged."""
         st = self.state
         bloom_df = self._read_state("bloom", r, BLOOM_SCHEMA)
-        st.write("schedule", r,
-                 self.spark.createDataFrame([], SCHEDULE_SCHEMA))
+        st.write("schedule", r, local_df(self.spark, [], SCHEDULE_SCHEMA))
         st.write("frontier", r + 1, frontier)
-        st.write("seen", r + 1, self.spark.createDataFrame([], SEEN_SCHEMA))
+        st.write("seen", r + 1, local_df(self.spark, [], SEEN_SCHEMA))
         st.write("bloom", r + 1, bloom_df)
         st.write_rows("round_log", r, self._log_rows(r, stats, []),
                       ROUND_LOG_SCHEMA)

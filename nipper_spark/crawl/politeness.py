@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nipper_spark.operators.topk import topk_per_key
+from nipper_spark.session import local_df
 
 # deterministic total order of a frontier/wave: closest-first BFS,
 # then best score, then lexicographic URL tiebreak (required to match
@@ -152,8 +153,8 @@ class CrawlPolicy:
 def budgets_df(spark, policy: CrawlPolicy) -> DataFrame:
     """Host-override budgets as a (small, broadcastable) dimension."""
     rows = [(h, t) for h, t in sorted(policy.host_tokens.items())]
-    return spark.createDataFrame(rows or [("__none__", 0)],
-                                 "host string, tokens int")
+    return local_df(spark, rows or [("__none__", 0)],
+                    "host string, tokens int")
 
 
 def _maybe_broadcast(df: DataFrame, n_rows: int | None,
@@ -240,9 +241,8 @@ def rules_df_from_policy(spark, policy: CrawlPolicy) -> DataFrame:
     rows += [(h, p, True)
              for h, ps in sorted(policy.robots_allow.items())
              for p in sorted(set(ps)) if p]
-    return spark.createDataFrame(rows or [("__none__", "\x00", False)],
-                                 "host string, prefix string, "
-                                 "allow boolean")
+    return local_df(spark, rows or [("__none__", "\x00", False)],
+                    "host string, prefix string, allow boolean")
 
 
 def policy_rules_rows(policy: CrawlPolicy) -> int:

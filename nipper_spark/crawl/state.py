@@ -27,6 +27,8 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
+from nipper_spark.session import arrow_table, local_df
+
 TABLES = ("frontier", "seen", "bloom", "schedule", "round_log")
 
 FRONTIER_SCHEMA = ("url string, host string, host_bucket int, depth int, "
@@ -110,23 +112,11 @@ class CrawlState:
         job + task launch + commit protocol (~0.15 s per round of pure
         fixed latency), under the same staging-then-rename visibility
         contract as :meth:`write`. Read back via :meth:`read` /
-        :meth:`read_all_rounds` with the explicit schema, so the
-        arrow↔spark type mapping is pinned here."""
-        import pyarrow as pa
+        :meth:`read_all_rounds` with the explicit schema; the table is
+        built by :func:`~nipper_spark.session.arrow_table`, the same
+        DDL→Arrow mapping :func:`~nipper_spark.session.local_df` uses."""
         import pyarrow.parquet as pq
-        _MAP = {"int": pa.int32(), "long": pa.int64(),
-                "bigint": pa.int64(), "double": pa.float64(),
-                "string": pa.string(), "boolean": pa.bool_(),
-                "binary": pa.binary()}
-        fields = []
-        for part in schema.split(","):
-            name, typ = part.strip().rsplit(" ", 1)
-            fields.append(pa.field(name, _MAP[typ]))
-        pschema = pa.schema(fields)
-        cols = list(zip(*rows)) if rows else [[] for _ in fields]
-        tbl = pa.Table.from_arrays(
-            [pa.array(list(c), type=f.type)
-             for c, f in zip(cols, pschema)], schema=pschema)
+        tbl = arrow_table(rows, schema)
         final = self._round_dir(table, r)
         tmp = final + ".staging"
         shutil.rmtree(tmp, ignore_errors=True)
@@ -138,7 +128,7 @@ class CrawlState:
     def read(self, table: str, r: int, schema: str) -> DataFrame:
         path = self._round_dir(table, r)
         if not os.path.isdir(path):
-            return self.spark.createDataFrame([], schema)
+            return local_df(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(path)
 
     def read_all_rounds(self, table: str, upto: int, schema: str) -> DataFrame:
@@ -146,7 +136,7 @@ class CrawlState:
         paths = [self._round_dir(table, r) for r in range(upto + 1)]
         paths = [p for p in paths if os.path.isdir(p)]
         if not paths:
-            return self.spark.createDataFrame([], schema)
+            return local_df(self.spark, [], schema)
         return self.spark.read.schema(schema).parquet(*paths)
 
     def compact(self, table: str, upto: int, schema: str) -> None:

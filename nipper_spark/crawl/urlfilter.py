@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nipper_spark.functions.url import HOST_RE_SQL
+from nipper_spark.session import local_df
 
 DEFAULT_BANNED_EXTS = (
     "jpg", "jpeg", "png", "gif", "webp", "ico", "svg",
@@ -86,9 +87,9 @@ def url_frontier_filter(cands: DataFrame,
         _reg_domain_col(host).alias("_rd"),
         ext.alias("_ext"), qlen.alias("_qlen"), depth.alias("_depth"))
     if blocked_domains:
-        bdf = (cands.sparkSession
-               .createDataFrame([(d, True) for d in blocked_domains],
-                                "reg_domain string, _blocked boolean"))
+        bdf = local_df(cands.sparkSession,
+                       [(d, True) for d in blocked_domains],
+                       "reg_domain string, _blocked boolean")
         base = base.join(F.broadcast(bdf),
                          F.col("_rd") == F.col("reg_domain"), "left")
     else:

@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nipper_spark.session import local_df
+
 MEDIA_SCHEMA = ("media_id long, kind string, payload binary, "
                 "mime string, width int, height int, duration_ms int")
 
@@ -228,7 +230,7 @@ def synth_media_rows(n: int = 64, seed: int = 42) -> list[tuple]:
 
 
 def synth_media_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
-    return spark.createDataFrame(synth_media_rows(n, seed), MEDIA_SCHEMA)
+    return local_df(spark, synth_media_rows(n, seed), MEDIA_SCHEMA)
 
 
 def synth_real_media_rows(n: int = 24, seed: int = 7) -> list[tuple]:
@@ -262,8 +264,7 @@ def synth_real_media_rows(n: int = 24, seed: int = 7) -> list[tuple]:
 
 
 def synth_real_media_df(spark, n: int = 24, seed: int = 7) -> DataFrame:
-    return spark.createDataFrame(synth_real_media_rows(n, seed),
-                                 MEDIA_SCHEMA)
+    return local_df(spark, synth_real_media_rows(n, seed), MEDIA_SCHEMA)
 
 
 REAL_DECODE_SCHEMA = ("media_id long, kind string, width int, height int, "

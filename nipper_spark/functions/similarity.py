@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nipper_spark.operators.parallelism import ensure_min_parallelism
+from nipper_spark.session import local_df
 
 
 def _as_matrix(series: pd.Series) -> np.ndarray:
@@ -87,8 +88,13 @@ def _hyperplanes(dim: int, n_bits: int, seed: int = 42) -> np.ndarray:
 def lsh_bucket_udf(dim: int, n_bits: int = 16, bands: int = 4,
                    seed: int = 42):
     """array<float> → array<int> of ``bands`` bucket codes (sign-bit LSH,
-    n_bits/bands bits per band). One numpy matmul per Arrow batch."""
+    n_bits/bands bits per band). One numpy matmul per Arrow batch.
+    A band code keeps 24 bits below its ``b << 24`` band tag, so more
+    bits per band would overlap the tag and wrap the int32 codes."""
     bits_per_band = n_bits // bands
+    if bits_per_band > 24:
+        raise ValueError(f"lsh_bucket_udf: n_bits // bands = "
+                         f"{bits_per_band} > 24 bits per band")
     planes = _hyperplanes(dim, n_bits, seed)
 
     @F.pandas_udf("array<int>")
@@ -121,8 +127,8 @@ def ann_lsh_topk(corpus: DataFrame, queries: list[tuple[int, list[float]]],
     c = ensure_min_parallelism(corpus).select(
         F.col(id_col).alias("vec_id"),
         F.explode(buckets(F.col(vec_col))).alias("bucket"))
-    qdf = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in queries],
+    qdf = local_df(
+        spark, [(int(q), [float(x) for x in v]) for q, v in queries],
         "query_id long, q_embedding array<float>")
     q = qdf.select("query_id",
                    F.explode(buckets(F.col("q_embedding"))).alias("bucket"))
@@ -253,8 +259,9 @@ def ann_ivf_topk(corpus: DataFrame, queries: list[tuple[int, list[float]]],
         order = np.argsort(-row, kind="stable")[:n_probe]
         for lid in order:
             probe_rows.append((int(qid), [float(x) for x in qv], int(lid)))
-    qdf = spark.createDataFrame(
-        probe_rows, "query_id long, q_embedding array<float>, list_id int")
+    qdf = local_df(
+        spark, probe_rows,
+        "query_id long, q_embedding array<float>, list_id int")
 
     cand = sharded.join(F.broadcast(qdf), "list_id")
 
@@ -462,8 +469,8 @@ def ann_ivfpq_topk(corpus: DataFrame,
         for lid in np.argsort(-row, kind="stable")[:n_probe]:
             probe_rows.append((int(qid), [float(x) for x in qv],
                                int(lid)))
-    qdf = spark.createDataFrame(
-        probe_rows, "query_id long, q_norm array<float>, list_id int")
+    qdf = local_df(
+        spark, probe_rows, "query_id long, q_norm array<float>, list_id int")
     cand = coded.join(F.broadcast(qdf), "list_id")
 
     @F.pandas_udf("float")
@@ -497,8 +504,8 @@ def ann_ivfpq_topk(corpus: DataFrame,
     # exact re-rank: true vectors join back by id (the index itself
     # never carries them)
     withvec = short.join(src, "vec_id")
-    qexact = spark.createDataFrame(
-        [(int(q), [float(x) for x in v]) for q, v in queries],
+    qexact = local_df(
+        spark, [(int(q), [float(x) for x in v]) for q, v in queries],
         "query_id long, q_embedding array<float>")
     withq = withvec.join(F.broadcast(qexact), "query_id")
 
@@ -682,8 +689,8 @@ def embedding_near_dup_incremental(new_vecs: DataFrame,
     from .dedup import _capped_candidates
     sample = new_vecs.select(vec_col).first()
     if sample is None:  # empty incremental batch → no pairs by contract
-        return new_vecs.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double")
+        return local_df(new_vecs.sparkSession, [],
+                        "id_a long, id_b long, cosine double")
     dim = len(sample[0])
     buckets = lsh_bucket_udf(dim, n_bits, bands, seed)
     union = (new_vecs.select(F.col(id_col).alias("id"),

@@ -9,13 +9,21 @@ workload, not copied boilerplate:
   10k-row default batches would make worker memory spiky;
 - shuffle partitions sized for the sandbox; on a real cluster AQE
   coalesces from a high initial number instead.
+
+Driver-built tables enter Spark through :func:`local_df` (Arrow), never
+``createDataFrame`` on Python rows: that path pickles the rows into a
+Python RDD, whose first action starts a second Python worker pool and
+whose every scan runs Python tasks.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def build_session(app: str = "nipper-spark", master: str | None = None,
@@ -51,3 +59,22 @@ def build_session(app: str = "nipper-spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def arrow_table(rows: list, ddl: str) -> pa.Table:
+    """Python row tuples → Arrow table typed by the DDL schema, through
+    pyspark's own Spark→Arrow type mapping. Timestamps stay tz-naive so
+    naive datetimes mean session-local wall time, as they do for
+    ``createDataFrame`` on rows."""
+    schema = to_arrow_schema(StructType.fromDDL(ddl), timestamp_utc=False)
+    cols = list(zip(*rows)) if rows else [() for _ in schema]
+    return pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, schema)],
+        schema=schema)
+
+
+def local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """A driver-built table as a driver-local ``LocalRelation``: the rows
+    cross to the JVM once as Arrow, scans run no Python tasks, and the
+    optimizer sees exact size statistics."""
+    return spark.createDataFrame(arrow_table(rows, ddl), ddl)

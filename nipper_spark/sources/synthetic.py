@@ -164,10 +164,11 @@ def pages_df(spark, include_fixtures: bool = True, n_pages: int = 200,
     """Small-scale pages DataFrame (fixtures + driver-side synth). In
     production this is ``spark.read.table("pages")`` (Iceberg, bucketed
     by host hash); use ``synth_pages_df`` for big benchmark corpora."""
+    from nipper_spark.session import local_df
     rows = synth_pages_rows(n_pages, links_per_page, n_hosts, seed=seed)
     if include_fixtures:
         rows = fixture_pages_rows() + rows
-    df = spark.createDataFrame(rows, PAGES_SCHEMA)
+    df = local_df(spark, rows, PAGES_SCHEMA)
     if partitions:
         df = df.repartition(partitions, "url")
     return df

@@ -426,6 +426,17 @@ class TestSimilarity:
             # self-match first with cosine ~1
             assert mine[0] == qid
 
+    def test_lsh_band_width_limit(self):
+        """A band code keeps 24 bits below its band tag: 25 bits per
+        band would wrap the int32 codes, so construction refuses."""
+        from nipper_spark.functions.similarity import lsh_bucket_udf
+        with pytest.raises(ValueError, match="24"):
+            lsh_bucket_udf(8, n_bits=25, bands=1)
+        with pytest.raises(ValueError, match="24"):
+            lsh_bucket_udf(8, n_bits=100, bands=4)
+        assert lsh_bucket_udf(8, n_bits=24, bands=1) is not None
+        assert lsh_bucket_udf(8, n_bits=96, bands=4) is not None
+
     def test_lsh_recall_vs_brute(self, spark, emb):
         from nipper_spark.functions.similarity import (
             ann_brute_topk, ann_lsh_topk)
