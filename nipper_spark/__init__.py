@@ -23,7 +23,12 @@ Layout
 - ``nipper_spark.streaming`` incremental (batch-round) drivers
 """
 
+from nipper_spark import zipimport_cache
 from nipper_spark.html import (  # noqa: F401
     Document, Matcher, Selection, SelectorError)
+
+# every engine UDF unpickles through this package, so each reused
+# Python worker gets the stat-checked archive invalidation
+zipimport_cache.install()
 
 __version__ = "0.1.0"

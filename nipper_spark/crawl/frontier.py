@@ -290,9 +290,9 @@ class FrontierEngine:
         rides an Observation on a write we run anyway (the free-counter
         pattern, SURVEY.md §2.9) — a round costs ~23 Spark jobs
         (``frontier.jobs_per_round``) however many statistics it keeps,
-        so per-round fixed latency stays flat as cluster size grows. ``known_nonempty`` skips the emptiness
-        probe job when the caller already proved it (previous round's
-        frontier_next > 0).
+        so per-round fixed latency stays flat as cluster size grows.
+        ``known_nonempty`` skips the emptiness probe job when the caller
+        already proved it (previous round's frontier_next > 0).
 
         A round that read carried checkpoint blocks and fails in Spark
         (blocks lost with an executor, or evicted) replays ONCE from

@@ -7,6 +7,7 @@ and final URL-seen set under the same seed list + politeness budget
 import shutil
 import threading
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -113,6 +114,38 @@ class TestBloom:
             assert B.bloom_might_contain(payload, members).all()
 
         prop()
+
+    @staticmethod
+    def _naive_set_bits(bits, idx):
+        out = bytearray(bits.tobytes())
+        for i in idx.ravel().tolist():
+            out[i >> 3] |= 1 << (i & 7)
+        return bytes(out)
+
+    @pytest.mark.parametrize("n_idx, m_bits", [
+        (10, 1 << 16),        # tiny delta into a large filter
+        (5000, 1 << 16),      # delta denser than one index per 64 bits
+    ])
+    def test_set_bits_matches_naive(self, n_idx, m_bits):
+        rng = np.random.default_rng(n_idx)
+        bits = rng.integers(0, 256, m_bits // 8, dtype=np.uint8)
+        idx = rng.integers(0, m_bits, n_idx, dtype=np.uint64)
+        # duplicate indices, and distinct indices sharing one byte
+        idx[-4:] = [idx[0], idx[0], 8, 9]
+        idx = idx.reshape(-1, 1)
+        want = self._naive_set_bits(bits, idx)
+        B._set_bits(bits, idx)
+        assert bits.tobytes() == want
+
+    def test_bloom_add_payload_matches_naive(self):
+        m = B.bloom_sizing(50_000)
+        base = B.bloom_build([f"http://h.test/{i}" for i in range(3000)], m)
+        for urls in (["http://n.test/0", "http://n.test/0"],
+                     [f"http://n.test/{i}" for i in range(2000)]):
+            bits = np.frombuffer(base, dtype=np.uint8)
+            want = self._naive_set_bits(
+                bits, B._probe_indices(urls, m, B.DEFAULT_K))
+            assert B.bloom_add(base, urls, m) == want
 
 
 class TestOracleSanity:

@@ -58,22 +58,46 @@ def compare(name, spark_df, sql, con):
     return problems
 
 
-def main():
-    import __spark_entry__ as entrymod
-    from nipper_spark.session import build_session
-    spark = build_session("oracle-check", master="local[8]",
-                          shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+class MissingFixture:
+    """Stands in for the SQL of an oracle whose builder could not open
+    a fixture file: the query fails, it is never demoted to the weaker
+    rows-only check."""
+
+    def __init__(self, path):
+        self.path = path
+
+
+def _mark_missing_fixture(builder):
+    def build(*args, **kwargs):
+        try:
+            return builder(*args, **kwargs)
+        except FileNotFoundError as e:
+            return MissingFixture(e.filename or str(e))
+    return build
+
+
+def guard_fixture_builders(entrymod):
+    """Wrap every ``_o_*`` oracle builder of the entry module, so a
+    missing fixture fails its own query instead of ``oracle_sql()``."""
+    for name, fn in list(vars(entrymod).items()):
+        if name.startswith("_o_") and callable(fn):
+            setattr(entrymod, name, _mark_missing_fixture(fn))
+
+
+def run(entrymod, spark, con, only=()):
+    """Check every query of the entry module (or those in ``only``);
+    print one line per query and return the names that failed."""
+    guard_fixture_builders(entrymod)
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    only = set(sys.argv[1:])
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
+            continue
+        if isinstance(oracles.get(name), MissingFixture):
+            failed.append(name)
+            print(f"✗ {name:26s} oracle fixture missing: "
+                  f"{oracles[name].path}")
             continue
         t0 = time.time()
         try:
@@ -99,6 +123,20 @@ def main():
                 print(f"    {str(p)[:500]}")
         else:
             print(f"✓ {name:26s} ({dt:.1f}s)")
+    return failed
+
+
+def main():
+    import __spark_entry__ as entrymod
+    from nipper_spark.session import build_session
+    spark = build_session("oracle-check", master="local[8]",
+                          shuffle_partitions=8)
+    spark.sparkContext.setLogLevel("ERROR")
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    failed = run(entrymod, spark, con, set(sys.argv[1:]))
     print("FAILED:", failed if failed else "none")
     return 1 if failed else 0
 
